@@ -875,7 +875,16 @@ def detect_encoding(payload: bytes) -> tuple[str, str] | None:
     latin_mixed = int((high & (_left(in_word) | _right(in_word))).sum())
     if latin_mixed / n_high > 0.3:
         return None
-    n_ascii_alpha = int(alpha.sum())
+    # The dominance floor weighs TEXT, not markup: the letters of tag and
+    # attribute names (`<a href="/c0">`) are not Latin prose, and a short
+    # undeclared CJK page with a link-heavy nav would otherwise read as
+    # Latin-dominated. A byte is inside a tag when the last '<' at or
+    # before it is later than the last '>' (no legacy CJK trail byte is
+    # 0x3C/0x3E, so the brackets are always ASCII).
+    pos = np.arange(arr.size)
+    last_open = np.maximum.accumulate(np.where(arr == 0x3C, pos, -1))
+    last_close = np.maximum.accumulate(np.where(arr == 0x3E, pos, -1))
+    n_ascii_alpha = int((alpha & (last_open <= last_close)).sum())
     if n_high / (n_high + n_ascii_alpha) < 0.25:
         return None
 

@@ -342,6 +342,16 @@ def test_detect_encoding_latin_negatives():
     assert decode_web("<p>привет мир</p>".encode("utf-8"))[1] == "utf-8"
 
 
+def test_undeclared_big5_with_link_heavy_nav_is_detected():
+    # A short undeclared Big5 page whose nav markup (`<a href="/c0">`…)
+    # outweighs its body: the Latin-dominance floor must count the ASCII
+    # letters of prose, not of tags, or the page decodes as latin-1.
+    r = corpus.gen_rows(734, seed=12000)[733]
+    got = extract(r.html)
+    assert got.ok and got.text == r.text_expected
+    assert got.encoding == "big5+detected"
+
+
 def test_iso2022_signature_detection():
     p = _undeclared_page("iso2022_jp", "日本 の 東京 です 言葉 を 時間")
     assert b"\x1b$B" in p

@@ -1,9 +1,15 @@
 """Measured accuracy of the heuristic language ID on a labeled fixture
 slice (VERDICT round 1 #9): every language in LANG_MARKERS gets natural
-sample sentences; the measured accuracy is recorded in COVERAGE.md."""
+sample sentences; the measured accuracy is recorded in COVERAGE.md. Also
+pins the single-scan ``lang_id`` and branch-free ``token_count_ws`` to
+their straightforward forms on adversarial rows."""
 
 from __future__ import annotations
 
+import re
+
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from multi_format_document_extractor_spark.functions import textstats as TS
@@ -115,6 +121,129 @@ def test_lang_id_und_on_markerless_text(spark):
     )
     got = {r["sid"]: r["pred"] for r in df.select("sid", TS.lang_id(F.col("text")).alias("pred")).collect()}
     assert got == {"x": "und", "y": "und"}
+
+
+# ---------------------------------------------------------------------------
+# The single-scan lang_id and branch-free token_count_ws against their
+# straightforward forms: one marker_hits pass per language with a
+# greatest/CASE argmax, and a CASE-guarded split.
+# ---------------------------------------------------------------------------
+
+
+def _lang_id_ref(col):
+    scored = [(code, TS.marker_hits(col, mk)) for code, mk in sorted(TS.LANG_MARKERS.items())]
+    best = F.greatest(*[s for _, s in scored])
+    pick = F.lit("und")
+    for code, s in reversed(scored):
+        pick = F.when((s == best) & (best > 0), F.lit(code)).otherwise(pick)
+    return pick
+
+
+def _token_count_ws_ref(col):
+    return F.when(F.trim(col) == "", 0).otherwise(F.size(TS.words(col)))
+
+
+ADVERSARIAL = [
+    # mixed case
+    "The AND tHe of OF To iN",
+    "DER Die das UND ist",
+    # word characters glued to a marker: '_' and digits are word chars
+    "the_x 1the the1 _the x_the the",
+    "and2 3und und_ _und und",
+    # prefix-sharing markers and their non-marker neighbours
+    "a an and ang anc anche ancak att at atta o os oss osx",
+    "un una um uma unas umas umm unt untuk",
+    "d da dan dans dat det de den der des di die",
+    # markers shared across languages
+    "in que con para dat det in in que",
+    "con para que com una",
+    # ties: the lowest language code wins
+    "het och",
+    "der el",
+    "con",
+    "que",
+    "dat det",
+    # non-ASCII neighbours: accented letters, the Kelvin sign, dotted I
+    "théâtre éthe theé thé the",
+    "\u212aung \u212aUNG",
+    "\u212aung kung KUNG \u212aUNG",
+    "İN ın in IN",
+    "naïve ist über das straße und",
+    # separators: punctuation, tabs, newlines
+    "the,and;of.to!in?that(is)was[for]with",
+    "der\ndie\tdas\r\nund",
+    "--- ... !!!",
+    # empty, whitespace-only and null
+    "",
+    "   ",
+    "\t\n",
+    " the ",
+    "\tthe and\n",
+    None,
+]
+
+
+def test_single_scan_columns_equal_reference_on_adversarial_rows(spark, corpus_rows):
+    texts = ADVERSARIAL + [
+        r.text_expected.decode("utf-8", "replace") for r in corpus_rows[:400]
+    ]
+    df = spark.createDataFrame(list(enumerate(texts)), "i int, text string")
+    t = F.col("text")
+    rows = df.select(
+        "i",
+        TS.lang_id(t).alias("lang"),
+        _lang_id_ref(t).alias("lang_ref"),
+        TS.token_count_ws(t).alias("ws"),
+        _token_count_ws_ref(t).alias("ws_ref"),
+    ).collect()
+    assert len(rows) == len(texts)
+    bad = [
+        (texts[r["i"]], r["lang"], r["lang_ref"], r["ws"], r["ws_ref"])
+        for r in rows
+        if (r["lang"], r["ws"]) != (r["lang_ref"], r["ws_ref"])
+    ]
+    assert not bad, bad
+    got = {texts[r["i"]]: r["lang"] for r in rows[: len(ADVERSARIAL)]}
+    # spot-check the reference itself on the cases the rows were built for
+    assert got["het och"] == "nl" and got["der el"] == "de" and got["con"] == "es"
+    assert got["the_x 1the the1 _the x_the the"] == "en"
+    assert got[None] == "und" and got["\t\n"] == "und"
+    # (?i) folds ASCII only: the Kelvin sign is not a 'k'
+    assert got["\u212aung \u212aUNG"] == "und"
+
+
+def _flat(markers) -> str:
+    return r"\b(" + "|".join(markers) + r")\b"
+
+
+_TOKENS = sorted(
+    {w for mk in TS.LANG_MARKERS.values() for w in mk}
+    | {"a", "an", "at", "dal", "ada", "anch", "osx", "unt", "zij", "THE", "Und"}
+)
+
+
+@given(
+    markers=st.lists(st.sampled_from(_TOKENS), min_size=1, max_size=12, unique=True),
+    stream=st.lists(
+        st.tuples(
+            st.sampled_from(_TOKENS) | st.text("adehnostu", min_size=1, max_size=5),
+            st.sampled_from([" ", "  ", "_", "1", ",", "\n", "é", "-", ""]),
+        ),
+        max_size=30,
+    ),
+)
+@settings(max_examples=300, deadline=None)
+def test_marker_alternation_matches_flat_alternation(markers, stream):
+    """The prefix-factored alternation finds exactly the matches (spans and
+    text) of the plain ``w1|w2|…`` alternation, case-insensitively."""
+    text = "".join(tok + sep for tok, sep in stream)
+    flat = re.compile(_flat(markers), re.IGNORECASE | re.ASCII)
+    factored = re.compile(
+        r"\b(" + TS.marker_alternation(m.lower() for m in markers) + r")\b",
+        re.IGNORECASE | re.ASCII,
+    )
+    spans = [m.span() for m in flat.finditer(text)]
+    assert [m.span() for m in factored.finditer(text)] == spans
 
 
 def test_router_ladder_order_and_branches(spark):
